@@ -3,35 +3,50 @@
 Five families, all Spark-first (built-in functions; the only loops are
 JVM-side higher-order array functions):
 
-  exact_dedup        hash-groupBy on normalized-text fingerprint
+  exact_dedup        min doc_id per normalized-text fingerprint (window)
   minhash_pairs      MinHash + LSH banding (shingle → minhash → band →
-                     bucket join → exact-Jaccard verify)
-  simhash            64-bit SimHash signature per doc; near-dups = band join
+                     bucket groupBy → exact-Jaccard verify)
+  simhash            64-bit SimHash signature per doc; near-dups = band
+                     bucket groupBy → popcount verify
   ngram_jaccard      exact n-gram Jaccard via shingle inverted index
   embedding dup      cosine near-dup over embedding vectors (similarity.py)
 
 Scale notes: the shingle explode is the only fan-out (O(doc_len) rows/doc);
 minhash aggregates it straight back down with a single groupBy(min...), so
-the shuffle volume is O(docs × num_hashes). Band-bucket joins only shuffle
-(band, signature) keys. The exact-Jaccard verify runs only on candidate
-pairs. All hashes are the portable md5-prefix (text.portable_hash64) so
-every stage has a DuckDB oracle; swap xxhash64 in for production speed.
+the shuffle volume is O(docs × num_hashes). LSH candidates come from ONE
+groupBy over (band, signature) keys (_bucket_pairs): the signatures are
+computed and shuffled once, where a bucket self-join planned an exchange
+per side. The exact-Jaccard verify runs only on candidate pairs. All hashes
+are the portable md5-prefix (text.portable_hash64) so every stage has a
+DuckDB oracle; swap xxhash64 in for production speed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cuttana_spark.operators.text import normalized, portable_hash64, shingles
+from cuttana_spark.operators.edges import _swap_ephemeral
+from cuttana_spark.operators.text import (
+    normalized,
+    portable_hash64,
+    shingles,
+    spread_small_input,
+)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, canonical_id): canonical = min doc_id among docs with equal
-    normalized text. Docs with canonical_id == doc_id are the keepers."""
-    fp = df.select("doc_id", portable_hash64(normalized(F.col(text_col))).alias("fp"))
-    canon = fp.groupBy("fp").agg(F.min("doc_id").alias("canonical_id"))
-    return fp.join(canon, "fp").select("doc_id", "canonical_id")
+    normalized text. Docs with canonical_id == doc_id are the keepers; a
+    doc with null text has no fingerprint and no row. One exchange on the
+    fingerprint and a window min — no aggregate joined back to its input."""
+    fp = (
+        spread_small_input(df)
+        .select("doc_id", portable_hash64(normalized(F.col(text_col))).alias("fp"))
+        .filter(F.col("fp").isNotNull())
+    )
+    canon = F.min("doc_id").over(Window.partitionBy("fp"))
+    return fp.select("doc_id", canon.alias("canonical_id"))
 
 
 def minhash_signatures(
@@ -67,6 +82,36 @@ def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     return agg.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
+def _bucket_pairs(banded: DataFrame, *carry: str) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of docs sharing an LSH
+    bucket. `banded` has one row per (doc_id, band, bsig) with doc_id a row
+    key per band; each `carry` column rides along as `<carry>_a`/`<carry>_b`.
+
+    ONE groupBy collects each bucket's members sorted by doc_id, and the
+    pairs are expanded within the bucket — the signatures are shuffled once,
+    not once per side of a self-join. A bucket of m docs still yields
+    m(m-1)/2 pairs, as the join did."""
+    members = (
+        banded.groupBy("band", "bsig")
+        .agg(F.array_sort(F.collect_list(F.struct("doc_id", *carry))).alias("m"))
+        .filter(F.size("m") > 1)
+    )
+    n = F.size("m")
+    pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.transform(
+                F.slice("m", i + 1, n),
+                lambda y: F.struct(F.element_at("m", i).alias("x"), y.alias("y")),
+            ),
+        )
+    )
+    cols = [F.col("p.x.doc_id").alias("doc_a"), F.col("p.y.doc_id").alias("doc_b")]
+    for c in carry:
+        cols += [F.col(f"p.x.{c}").alias(f"{c}_a"), F.col(f"p.y.{c}").alias(f"{c}_b")]
+    return members.select(F.explode(pairs).alias("p")).select(*cols).distinct()
+
+
 def minhash_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -77,9 +122,12 @@ def minhash_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding, verified with exact
     n-gram Jaccard. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b,
-    jaccard >= threshold."""
+    jaccard >= threshold.
+
+    The shingle relation feeds both the signatures and the verify, so it is
+    cached in a one-live-slot cache: the next call releases it."""
     rows = num_hashes // bands
-    sh = shingles(df, text_col, n=shingle_n).cache()
+    sh = _swap_ephemeral("minhash_shingles", shingles(df, text_col, n=shingle_n))
     sig = _signatures_from_shingles(sh, num_hashes)
     banded = sig.select(
         "doc_id",
@@ -93,23 +141,8 @@ def minhash_pairs(
             )
         ).alias("bs"),
     ).select("doc_id", "bs.band", "bs.bsig")
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "bsig"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    jac = _jaccard_from_shingles(sh, cand)
+    jac = _jaccard_from_shingles(sh, _bucket_pairs(banded))
     return jac.filter(F.col("jaccard") >= threshold)
-
-
-def ngram_jaccard_for_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text", shingle_n: int = 3
-) -> DataFrame:
-    """Exact Jaccard for given (doc_a, doc_b) pairs via the shingle index."""
-    sh = shingles(df, text_col, n=shingle_n).cache()
-    return _jaccard_from_shingles(sh, pairs)
 
 
 def _jaccard_from_shingles(sh: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -196,8 +229,6 @@ def simhash(
     JVM hash, ~10x cheaper than md5). Packing uses shiftleft + bitwiseOR so
     bit 63 wraps into the sign bit instead of overflowing ANSI arithmetic.
     """
-    from cuttana_spark.operators.text import spread_small_input
-
     words = spread_small_input(df).select(
         "doc_id", F.explode(F.split(normalized(F.col(text_col)), " ")).alias("w")
     ).filter(F.col("w") != "")
@@ -233,9 +264,10 @@ def simhash_pairs(
     max_hamming: int = 3,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: band-exact-match candidate join (a pair
-    within hamming distance d < bands must share at least one exact band),
-    verified with a popcount on the XOR of full signatures.
+    """Near-dup pairs by SimHash: band-exact-match candidates (a pair within
+    hamming distance d < bands must share at least one exact band, i.e. one
+    _bucket_pairs bucket), verified with a popcount on the XOR of the full
+    signatures carried through the grouping.
 
     Returns (doc_a, doc_b, hamming) with doc_a < doc_b, hamming <= max_hamming.
     """
@@ -253,22 +285,11 @@ def simhash_pairs(
     banded = sig.select(
         "doc_id", "simhash", F.explode(F.array(*band_structs)).alias("bs")
     ).select("doc_id", "simhash", "bs.band", "bs.bsig")
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "bsig"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sa"),
-            F.col("y.simhash").alias("sb"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(banded, "simhash")
     return cand.select(
         "doc_a",
         "doc_b",
-        F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).alias("hamming"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
 
 

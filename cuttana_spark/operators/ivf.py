@@ -154,15 +154,17 @@ def ivf_probe_gemm(
     closure, so the plan has NO query-side exchange and NO cogroup sort —
     the only distributed work is one scan of the cached cells. Candidates,
     cosines and the final (cosine desc, match_id asc) top-k window are
-    unchanged. Larger query sets keep the fully-distributed cogroup path."""
+    unchanged. Larger query sets keep the fully-distributed cogroup path.
+    The route is decided by counting at most max_broadcast_queries + 1
+    query rows, not the whole query input; an empty query set returns an
+    empty (query_id, match_id, cosine, rank) frame."""
     import pandas as pd
 
     from cuttana_spark.operators.similarity import _grouped_topk_gemm
     from pyspark.sql import Window
 
     C = centroids
-    nq_total = queries.count()
-    if nq_total > max_broadcast_queries:
+    if queries.limit(max_broadcast_queries + 1).count() > max_broadcast_queries:
         def probe(batches):
             for pdf in batches:
                 if not len(pdf):
@@ -187,6 +189,10 @@ def ivf_probe_gemm(
         return _grouped_topk_gemm(qb, cells, k, "cell")
 
     qrows = queries.select("vec_id", "embedding").collect()
+    if not qrows:
+        return cells.sparkSession.createDataFrame(
+            [], "query_id long, match_id long, cosine double, rank int"
+        )
     qids = np.array([r.vec_id for r in qrows], np.int64)
     Q = np.array([list(r.embedding) for r in qrows], np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)

@@ -12,6 +12,7 @@ RE2/PCRE subset.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,6 +50,7 @@ def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality features + composite score: length, punctuation
     density, digit density, mean word length, stopword hit-rate."""
+    df = spread_small_input(df)
     t = F.col(text_col)
     n_chars = F.length(t)
     n_punct = F.size(F.regexp_extract_all(t, F.lit("[^A-Za-z0-9\\s]"), 0))
@@ -81,6 +83,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 def with_language(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-profile language ID over {en, de, fr, es} ('und' = unknown
     when no profile matches). Pure built-ins → pushdown-friendly."""
+    df = spread_small_input(df)
     t = F.lower(F.col(text_col))
     hits = {
         lang: F.size(F.regexp_extract_all(t, F.lit("\\b(" + "|".join(words) + ")\\b"), 0))
@@ -99,6 +102,29 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", portable_hash64(normalized(F.col(text_col))))
 
 
+def _num_partitions(plan) -> int:
+    """Partition count of a physical plan, read from the plan itself: an
+    exchange or repartition states its count, a cached relation that is
+    loaded reports its stored blocks, and a leaf scan builds (but does not
+    run) its RDD. Unknown-partitioned nodes take their children's count."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _num_partitions(plan.executedPlan())
+    if name == "InMemoryTableScanExec":
+        cached = plan.relation().cacheBuilder()
+        if cached.isCachedColumnBuffersLoaded():
+            return cached.cachedColumnBuffers().getNumPartitions()
+        return _num_partitions(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    counts = [_num_partitions(kids.apply(i)) for i in range(kids.size())]
+    return sum(counts) if name == "UnionExec" else max(counts)
+
+
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition a df whose scan has fewer partitions than the
     session parallelism (guide §2.5 "input skew: fix at the source or
@@ -107,21 +133,36 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     measured round 7: the shingle explode over the 5,000-doc bench corpus
     spent 7.9 s single-threaded vs ~0.6 s spread over 32. Inputs that are
     already at least as parallel as the session (any real at-scale table)
-    are returned UNCHANGED — no extra exchange on the 100 TB path."""
+    are returned UNCHANGED — no extra exchange on the 100 TB path.
+
+    The count comes from the physical plan, not `df.rdd`: building the RDD
+    of an adaptive plan runs its shuffle stages, so a chained call (each
+    per-row operator spreads its own input) would start jobs — and AQE
+    would report the coalesced count of an already-spread input. Read from
+    the plan, a spread input states its round-robin count and passes
+    through, so a chain of operators pays ONE exchange."""
     try:
-        sc = df.sparkSession.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            return df.repartition(sc.defaultParallelism)
-    except Exception:
+        parallelism = df.sparkSession.sparkContext.defaultParallelism
+        plan = df._jdf.queryExecution().executedPlan()
+        if _num_partitions(plan) < parallelism:
+            return df.repartition(parallelism)
+    except (AttributeError, Py4JError):  # no JVM plan to read: leave df as is
         pass
     return df
 
 
 def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingle set per doc: (doc_id, shingle). Built from
-    normalized words with a JVM-side transform over a sequence — no UDF."""
-    df = spread_small_input(df)
-    words = F.split(normalized(F.col(text_col)), " ")
+    normalized words with a JVM-side transform over a sequence — no UDF.
+
+    The word array is projected as a column first: a lambda re-evaluates
+    every outer expression it references once per element, so slicing the
+    inline split would re-run the normalizing regex per shingle (O(L^2)
+    per doc)."""
+    df = spread_small_input(df).select(
+        "doc_id", F.split(normalized(F.col(text_col)), " ").alias("_words")
+    )
+    words = F.col("_words")
     n_sh = F.size(words) - (n - 1)
     # sequence(0, -1) would generate a DESCENDING range — guard empty docs
     idx = F.when(n_sh > 0, F.sequence(F.lit(0), n_sh - 1)).otherwise(
@@ -146,30 +187,47 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     A doc failing `passes_gopher` (all thresholds at the published
     magnitudes) is a repetition/boilerplate suspect.
+
+    Every signal is one per-row projection (no explode, no aggregate, no
+    join): the top bigram count is the longest run of equal values in the
+    doc's sorted bigram array, found by one `aggregate` pass — O(L log L) in
+    doc length. It is computed per ROW; the SQL oracle groups bigrams by
+    `doc_id`, so the two agree when `doc_id` is a row key.
     """
     t = F.col(text_col)
-    words = F.split(normalized(t), " ")
-    words = F.filter(words, lambda w: w != "")
+    # one projected word array (see shingles: lambdas re-evaluate inline
+    # expressions per element)
+    df = spread_small_input(df).withColumn(
+        "_words", F.filter(F.split(normalized(t), " "), lambda w: w != "")
+    )
+    words = F.col("_words")
     n_words = F.size(words)
     safe_words = F.greatest(n_words, F.lit(1))
 
     n_distinct = F.size(F.array_distinct(words))
     dup_word_ratio = (1.0 - n_distinct / safe_words).cast("double")
 
-    # top bigram via explode + two hash aggregates (linear in doc length;
-    # a per-doc nested array scan would be O(L^2) and die on long docs)
     n_big = F.greatest(n_words - 1, F.lit(0))
     idx = F.when(n_big > 0, F.sequence(F.lit(0), n_big - 1)).otherwise(
         F.array().cast("array<int>")
     )
     bigrams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, 2)))
-    big = df.select("doc_id", F.explode(bigrams).alias("bg"))
-    top = (
-        big.groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top_big"), F.sum("c").alias("n_big"))
+
+    def step(acc, bg):
+        run = F.when(bg == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            bg.alias("prev"), run.alias("run"), F.greatest(acc["top"], run).alias("top")
+        )
+
+    start = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("top"),
     )
+    top_big = F.aggregate(F.array_sort(bigrams), start, step, lambda acc: acc["top"])
+    top_bigram_ratio = F.when(
+        n_big > 0, top_big.cast("double") / n_big.cast("double")
+    ).otherwise(F.lit(0.0))
 
     total_word_chars = F.aggregate(
         words, F.lit(0), lambda acc, w: acc + F.length(w)
@@ -182,12 +240,7 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
         df.withColumn("dup_word_ratio", dup_word_ratio)
         .withColumn("mean_word_len", mean_word_len)
         .withColumn("symbol_ratio", symbol_ratio)
-        .join(top, "doc_id", "left")
-        .withColumn(
-            "top_bigram_ratio",
-            F.coalesce(F.col("top_big") / F.col("n_big"), F.lit(0.0)).cast("double"),
-        )
-        .drop("top_big", "n_big")
+        .withColumn("top_bigram_ratio", top_bigram_ratio)
     )
     return out.withColumn(
         "passes_gopher",
@@ -196,7 +249,7 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
         & (F.col("mean_word_len") >= 2.0)
         & (F.col("mean_word_len") <= 12.0)
         & (F.col("symbol_ratio") <= 1.0),
-    )
+    ).drop("_words")
 
 
 PII_PATTERNS = [

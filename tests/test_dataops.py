@@ -27,6 +27,7 @@ def test_exact_dedup_groups(spark):
         (2, "hello world"),  # same after normalization
         (3, "something else"),
         (4, "Hello world."),
+        (5, None),  # no fingerprint, no row
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r.canonical_id for r in D.exact_dedup(df).collect()}
@@ -485,3 +486,186 @@ def test_brute_force_gemm_query_cap_and_chunking(spark, emb, monkeypatch):
     want = norm(sim.brute_force_topk_gemm(sub, sub, k=3))
     monkeypatch.setattr(sim, "_GEMM_Q_CHUNK", 7)
     assert norm(sim.brute_force_topk_gemm(sub, sub, k=3)) == want
+
+
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_spread_small_input_reads_partitions_without_a_job(spark):
+    """A cached one-partition input is spread to the session parallelism,
+    and neither the spread nor a second call on its output starts a job:
+    the partition count is read from the plan, and the spread output
+    passes through unchanged."""
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(40)], "doc_id long, text string"
+    ).coalesce(1).cache()
+    df.count()
+    before = _job_ids(spark)
+    out = T.spread_small_input(df)
+    again = T.spread_small_input(out)
+    assert _job_ids(spark) == before
+    assert again is out
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    df.unpersist(False)
+
+
+def test_signals_chain_has_one_round_robin_exchange(spark):
+    df = spark.createDataFrame(
+        [(i, f"the cat sat on mat {i}") for i in range(20)], "doc_id long, text string"
+    ).coalesce(1).cache()
+    df.count()
+    chain = T.with_repetition(T.with_language(T.with_quality(df)))
+    plan = chain._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    assert chain.count() == 20
+    df.unpersist(False)
+
+
+def _repetition_reference(t: str) -> tuple:
+    import re
+
+    words = [w for w in re.sub(r"[^a-z0-9]+", " ", t.lower()).strip().split(" ") if w]
+    nw = max(len(words), 1)
+    big: dict = {}
+    for a, b in zip(words, words[1:]):
+        big[a + " " + b] = big.get(a + " " + b, 0) + 1
+    top = max(big.values()) / sum(big.values()) if big else 0.0
+    dup = 1.0 - len(set(words)) / nw
+    mwl = sum(len(w) for w in words) / nw
+    sym = len(re.findall(r"[^A-Za-z0-9\s]", t)) / nw
+    gopher = dup <= 0.5 and top <= 0.2 and 2.0 <= mwl <= 12.0 and sym <= 1.0
+    return (dup, top, mwl, sym, gopher)
+
+
+def test_with_repetition_degenerate_docs_match_reference(spark):
+    """Empty, symbol-only, one-word, repeated-word and tied-bigram docs match
+    a pure-Python reference exactly, under ANSI mode (no divide-by-zero on
+    docs with no bigrams)."""
+    texts = {
+        1: "",
+        2: "!!! ???",
+        3: "word",
+        4: "spam spam spam spam",
+        5: "a b a b c d c d",
+        6: "one two three four five six seven eight nine ten eleven",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = T.with_repetition(df).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    got = {
+        r.doc_id: (r.dup_word_ratio, r.top_bigram_ratio, r.mean_word_len,
+                   r.symbol_ratio, r.passes_gopher)
+        for r in rows
+    }
+    assert got == {i: _repetition_reference(t) for i, t in texts.items()}
+    assert got[5][1] == 2 / 7
+
+
+def _bucket_corpus(spark):
+    base = "the quick brown fox jumps over the lazy dog again and again every day"
+    rows = [
+        (1, base),
+        (2, base),
+        (3, base),  # 1-3 share every band: one bucket of three
+        (4, base.replace("lazy", "sleepy")),
+        (5, "completely different text about spark partitioning strategies at scale"),
+        (6, "completely different text about spark partitioning strategies at large scale"),
+        (7, "a short unrelated note"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _self_join_pairs(banded, *carry):
+    """The bucket self-join the grouped candidate helper replaced."""
+    cols = [F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")]
+    for c in carry:
+        cols += [F.col(f"x.{c}").alias(f"{c}_a"), F.col(f"y.{c}").alias(f"{c}_b")]
+    return (
+        banded.alias("x")
+        .join(banded.alias("y"), ["band", "bsig"])
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(*cols)
+        .distinct()
+    )
+
+
+def test_minhash_pairs_equals_bucket_self_join(spark):
+    df = _bucket_corpus(spark)
+    hashes, bands = 16, 4
+    rows = hashes // bands
+    sh = T.shingles(df).cache()
+    banded = D._signatures_from_shingles(sh, hashes).select(
+        "doc_id",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(",", F.slice("sig", b * rows + 1, rows)).alias("bsig"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("bs"),
+    ).select("doc_id", "bs.band", "bs.bsig")
+    assert banded.groupBy("band", "bsig").count().agg(F.max("count")).first()[0] >= 3
+    want = {
+        tuple(r)
+        for r in D._jaccard_from_shingles(sh, _self_join_pairs(banded)).collect()
+    }
+    got = {
+        tuple(r)
+        for r in D.minhash_pairs(
+            df, num_hashes=hashes, bands=bands, threshold=0.0
+        ).collect()
+    }
+    assert got == want and {(1, 2), (1, 3), (2, 3)} <= {p[:2] for p in got}
+    sh.unpersist(False)
+
+
+def test_simhash_pairs_equals_bucket_self_join(spark):
+    df = _bucket_corpus(spark)
+    bits, bands = 16, 4
+    width = bits // bands
+    sig = D.simhash(df, bits=bits)
+    banded = sig.select(
+        "doc_id",
+        "simhash",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright("simhash", b * width)
+                    .bitwiseAND(F.lit((1 << width) - 1))
+                    .alias("bsig"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("bs"),
+    ).select("doc_id", "simhash", "bs.band", "bs.bsig")
+    assert banded.groupBy("band", "bsig").count().agg(F.max("count")).first()[0] >= 3
+    want = {
+        (r.doc_a, r.doc_b, bin(r.simhash_a ^ r.simhash_b).count("1"))
+        for r in _self_join_pairs(banded, "simhash").collect()
+    }
+    got = {
+        tuple(r)
+        for r in D.simhash_pairs(df, bits=bits, bands=bands, max_hamming=bits).collect()
+    }
+    assert got == want and {(1, 2, 0), (1, 3, 0), (2, 3, 0)} <= got
+
+
+def test_minhash_pairs_keeps_one_shingle_cache(spark):
+    """Each call releases the previous call's cached shingle relation, so
+    two calls leave at most one of them persistent."""
+    df = _bucket_corpus(spark)
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persistent()
+    D.minhash_pairs(df).collect()
+    first = persistent() - before
+    D.minhash_pairs(df).collect()
+    left = persistent() - before
+    assert len(first) <= 1 and len(left) <= 1 and not first & left

@@ -103,3 +103,34 @@ def test_ivf_index_probe_split_equals_monolithic(spark, sf_dir):
     assert len(cell_shuffles(probe_dist)) == 1, cell_shuffles(probe_dist)
     cells.unpersist(False)
     emb.unpersist(False)
+
+
+def test_ivf_probe_gemm_empty_queries_and_route_cap(spark, sf_dir):
+    """An empty query set returns an empty top-k frame whatever the cap; at
+    the broadcast cap the probe takes the broadcast route, one below it the
+    distributed route, and both return the same top-k."""
+    from cuttana_spark.operators.ivf import ivf_index_gemm, ivf_probe_gemm
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    cells, C = ivf_index_gemm(emb, n_cells=8)
+    cells = cells.cache()
+    cells.count()
+    for cap in (100, 0):
+        empty = ivf_probe_gemm(cells, C, emb.limit(0), nprobe=3, k=5,
+                               max_broadcast_queries=cap)
+        assert empty.columns == ["query_id", "match_id", "cosine", "rank"]
+        assert empty.count() == 0
+    q = emb.filter("vec_id % 10 = 0").cache()
+    nq = q.count()
+    routes = {}
+    for cap in (nq, nq - 1):
+        out = ivf_probe_gemm(cells, C, q, nprobe=3, k=5, max_broadcast_queries=cap)
+        plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+        cogroup = any("hashpartitioning(cell" in l and "ENSURE_REQUIREMENTS" in l
+                      for l in plan)
+        top = sorted(map(tuple, out.select("query_id", "rank", "match_id").collect()))
+        routes[cap] = (cogroup, top)
+    assert routes[nq][0] is False and routes[nq - 1][0] is True
+    assert routes[nq][1] == routes[nq - 1][1] and len(routes[nq][1]) == nq * 5
+    for df in (q, cells, emb):
+        df.unpersist(False)
