@@ -90,26 +90,23 @@ def _bucket_pairs(banded: DataFrame, *carry: str) -> DataFrame:
     ONE groupBy collects each bucket's members sorted by doc_id, and the
     pairs are expanded within the bucket — the signatures are shuffled once,
     not once per side of a self-join. A bucket of m docs still yields
-    m(m-1)/2 pairs, as the join did."""
+    m(m-1)/2 pairs, as the join did, and they stream like the join's: each
+    member x is exploded into its own row, then paired with the members
+    after it, so no row holds more than the bucket (O(m) elements; a row
+    holding all pairs would need O(m^2) memory in one task)."""
     members = (
         banded.groupBy("band", "bsig")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", *carry))).alias("m"))
         .filter(F.size("m") > 1)
     )
-    n = F.size("m")
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice("m", i + 1, n),
-                lambda y: F.struct(F.element_at("m", i).alias("x"), y.alias("y")),
-            ),
-        )
+    firsts = members.select("m", F.posexplode("m").alias("i", "x"))
+    pairs = firsts.select(
+        "x", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("y")
     )
-    cols = [F.col("p.x.doc_id").alias("doc_a"), F.col("p.y.doc_id").alias("doc_b")]
+    cols = [F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")]
     for c in carry:
-        cols += [F.col(f"p.x.{c}").alias(f"{c}_a"), F.col(f"p.y.{c}").alias(f"{c}_b")]
-    return members.select(F.explode(pairs).alias("p")).select(*cols).distinct()
+        cols += [F.col(f"x.{c}").alias(f"{c}_a"), F.col(f"y.{c}").alias(f"{c}_b")]
+    return pairs.select(*cols).distinct()
 
 
 def minhash_pairs(

@@ -140,7 +140,13 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     per-row operator spreads its own input) would start jobs — and AQE
     would report the coalesced count of an already-spread input. Read from
     the plan, a spread input states its round-robin count and passes
-    through, so a chain of operators pays ONE exchange."""
+    through, so a chain of operators pays ONE exchange.
+
+    The price: an input that ends in a shuffle not yet executed (a join or
+    aggregate output) reports `spark.sql.shuffle.partitions`, not the
+    smaller count AQE may coalesce it to at run time, so it is NOT spread
+    and its per-row work runs on the coalesced partitions. Spread such an
+    input explicitly (`df.repartition(n)`) when it is known to be small."""
     try:
         parallelism = df.sparkSession.sparkContext.defaultParallelism
         plan = df._jdf.queryExecution().executedPlan()

@@ -669,3 +669,18 @@ def test_minhash_pairs_keeps_one_shingle_cache(spark):
     D.minhash_pairs(df).collect()
     left = persistent() - before
     assert len(first) <= 1 and len(left) <= 1 and not first & left
+
+
+def test_bucket_pairs_streams_a_large_bucket(spark):
+    """A bucket of a few thousand identical docs (every SimHash band one
+    bucket) expands to all m(m-1)/2 pairs without building them in one row."""
+    m = 3000
+    df = spark.range(1, m + 1).select(
+        "id", F.lit("the same boilerplate footer on every page").alias("text")
+    ).withColumnRenamed("id", "doc_id")
+    got = D.simhash_pairs(df, bits=16, bands=4, max_hamming=0).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("doc_a") < F.col("doc_b"), 1).otherwise(0)).alias("ordered"),
+        F.max("hamming").alias("h"),
+    ).first()
+    assert (got.n, got.ordered, got.h) == (m * (m - 1) // 2, m * (m - 1) // 2, 0)
